@@ -1494,7 +1494,8 @@ def q_ann_pq_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expression per emitted element — 0.5 s of work became minutes;
     # the old fold form was accidentally shielded by its interpreted
     # fallback). Fixed dim=64 is this dataset's contract (the dim the
-    # PQ split hard-codes anyway).
+    # PQ split hard-codes anyway): a ragged row would get a NULL norm
+    # and be quantized unnormalized, so it raises instead.
     from pandas_etl_spark.functions.similarity import (
         _flat_cols,
         _flat_dot_sql,
@@ -1502,6 +1503,17 @@ def q_ann_pq_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _d = _PQ_CHK_SUB * 8
+    emb = emb.withColumn(
+        "embedding",
+        F.when(F.size("embedding") == _d, F.col("embedding")).otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit(f"ann_pq_checked: embedding length is not {_d}, vec_id "),
+                    F.col("vec_id").cast("string"),
+                )
+            )
+        ),
+    )
     _e = emb.selectExpr(
         "vec_id", "embedding", *_flat_cols("embedding", _d, "__e")
     )

@@ -211,14 +211,17 @@ def salted_key_stat(
        pruning cannot diverge the two subtrees' canonical form), and a
        hot key's join rows stay spread across its salts.
 
-    The result is row-for-row identical to the window form (the stat is
-    exact, attached to every row), with per-task input bounded by
+    Rows with a NULL key or a NULL ``id_col`` are FILTERED OUT of the
+    result (the window form it replaced kept them, with a stat over the
+    NULL group). On the remaining rows the result is row-for-row
+    identical to the window form (the stat is exact, attached to every
+    row), with per-task input bounded by
     |hot key| / n_salts instead of |hot key|. ``n_salts`` defaults to
     the session's default parallelism (locally $SPARK_GRAFT_CPUS; on a
     cluster the core count) — scale-adaptive, not tuned to local[32].
 
-    Keys must be non-null (the attach join is an inner equality join;
-    every call site here guarantees non-null keys by construction).
+    Every call site here guarantees non-null keys and ids by
+    construction, so the filter drops nothing there.
     """
     spark = rows.sparkSession
     n = n_salts or spark.sparkContext.defaultParallelism
@@ -232,8 +235,8 @@ def salted_key_stat(
     # branch's subtree otherwise, the two consumers of the salted
     # exchange stop canonicalizing equal, and the source pipeline runs
     # twice (the §2a AQE-reuse defect class). _salt is never null
-    # (pmod∘xxhash64 of anything is non-null) and call sites guarantee
-    # non-null keys, so the filters drop nothing.
+    # (pmod∘xxhash64 of anything is non-null); NULL-key and NULL-id rows
+    # are dropped (see the docstring).
     notnull = F.col("_salt").isNotNull() & F.col(id_col).isNotNull()
     for c in keys:
         notnull = notnull & F.col(c).isNotNull()

@@ -223,8 +223,10 @@ def knn_join(
     distances among distinct synthetic points differ at ~1e-3 relative
     vs ~1e-15 arithmetic noise), then the final rank and the emitted
     distance are computed by the SAME shared haversine expression as
-    before on <= k+5 rows per key — output provably identical
-    (oracle-hash-verified at sf0.001/0.01/0.1). Profiled at sf0.1
+    before on <= k+5 rows per key. That k+5 slack is enough on the
+    benchmark datasets (output oracle-hash-identical at
+    sf0.001/0.01/0.1); it is verified there, not proven for arbitrary
+    inputs. Profiled at sf0.1
     (customer×supplier, 15M pairs): the scoring stage dominated the
     query at 62 executor-CPU-s; per-pair trig was the bulk of it."""
     flat, flon = fact_coords

@@ -9,6 +9,25 @@ Defaults are chosen for correctness-vs-oracle and 100 TB design posture:
 - ``spark.sql.shuffle.partitions`` sized to local cores for tests; on a
   real cluster AQE coalescing makes the initial number less critical.
 - Arrow enabled — all Pandas-UDF paths are Arrow-batched.
+- ``spark.sql.codegen.cache.maxEntries=2000`` — one pass of the
+  headline queries plus the YAML pipeline compiles 190–290 distinct
+  generated classes, more than Spark's default LRU of 100. A pass that
+  cycles through its plans in the same order then evicts every class
+  before its next use, so each rerun of the same plans (pipeline
+  resume, warm bench passes) recompiled nearly all of them inside its
+  tasks. 2000 covers that working set with headroom. It is a static
+  conf: it only applies when ``get_spark`` creates the session.
+- ``spark.sql.codegen.useIdInClassName=false`` — the cache is keyed by
+  the generated source, and by default a whole-stage class name carries
+  its codegen stage id. AQE can number the same pipeline differently
+  from one run to the next, depending on which query stage finishes
+  first, so the same code missed the cache under a new name. Without
+  the id, stack traces name ``GeneratedIterator`` instead of
+  ``GeneratedIteratorForCodegenStage<N>``.
+- ``spark.driver.memory`` defaults to half the physical RAM, capped at
+  48g (``$SPARK_GRAFT_DRIVER_MEM`` overrides it) — in local mode the
+  driver JVM is the only JVM, and a fixed 48g got it OOM-killed on
+  small hosts.
 """
 
 from __future__ import annotations
@@ -16,6 +35,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """Half the physical RAM in MiB, capped at 48g."""
+    ram_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, ram_mib // 2)}m"
+
 
 _DEFAULTS: dict[str, str] = {
     # pandas-parity permissive semantics (the reference never raises on
@@ -36,9 +62,14 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     # local mode: one JVM; driver memory is the only knob that matters
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()
+    ),
     "spark.ui.enabled": "false",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # compiled-class reuse across reruns: see the module docstring
+    "spark.sql.codegen.cache.maxEntries": "2000",
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

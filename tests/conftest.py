@@ -12,6 +12,29 @@ from pandas_etl_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+FAST_TIER_BANNER = (
+    'FAST TIER (-m "not slow"): the full oracle sweep and the whole-catalog '
+    'plan lint are excluded; run with -m "slow or not slow" for full-catalog parity'
+)
+
+
+def _fast_tier(config) -> bool:
+    return config.getoption("markexpr").strip() == "not slow"
+
+
+def pytest_report_header(config):
+    """Say when the run is the fast tier, so a passing default run is not
+    read as full-catalog oracle parity."""
+    return [FAST_TIER_BANNER] if _fast_tier(config) else []
+
+
+def pytest_sessionstart(session):
+    # -q hides the report header, and the usual suite command runs -q
+    tr = session.config.pluginmanager.get_plugin("terminalreporter")
+    if tr is not None and session.config.get_verbosity() < 0 and _fast_tier(session.config):
+        tr.write_line(FAST_TIER_BANNER)
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("pandas_etl_spark_tests", shuffle_partitions=8)

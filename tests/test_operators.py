@@ -1868,6 +1868,26 @@ def test_ann_recall_audit_bounds(spark, sf_dir):
     assert rows["ivf"]["mean_recall_at_k"] >= 0.5
 
 
+def test_ann_pq_checked_rejects_ragged_embedding(spark, sf_dir, tmp_path):
+    """A vector shorter than the 64-dim contract must raise: its flat
+    norm would be NULL and it would be quantized unnormalized."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pandas_etl_spark.catalog import QUERIES
+
+    t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    vecs = t.column("embedding").to_pylist()
+    vecs[-1] = vecs[-1][:63]
+    i = t.schema.get_field_index("embedding")
+    t = t.set_column(i, t.schema.field(i), pa.array(vecs, t.schema.field(i).type))
+    pq.write_table(t, tmp_path / "embeddings.parquet")
+    with pytest.raises(Exception, match="embedding length is not 64"):
+        QUERIES["ann_pq_checked"](spark, str(tmp_path)).collect()
+
+
 def test_checked_ann_twins_recall_vs_bruteforce(spark, sf_dir):
     """The portable IVF/PQ checked twins (sign-pattern-seeded one-pass
     IVF fit; lowest-id-init PQ Lloyd fit) must still behave like ANN

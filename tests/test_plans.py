@@ -892,3 +892,31 @@ def test_minhash_verification_has_no_interpreted_fold(spark, sf_dir):
         if ("aggregate(" in l or "zip_with(" in l) and "Scan" not in l
     ]
     assert not offenders, offenders
+
+
+SHORT_HEADLINE = [
+    "pricing_summary", "top_revenue_orders", "nation_revenue",
+    "window_topk_per_group", "window_running_total", "rollup_totals",
+    "sessionize", "session_window_agg", "asof_join_events", "dedup_exact",
+    "doc_stats", "quality_score", "ewm_mean",
+]
+
+
+def test_rerun_reuses_generated_classes(spark, sf_dir):
+    """Rerunning the same plans must reuse their compiled classes. One
+    pass of the 13 short headline queries compiles more distinct classes
+    than Spark's default codegen cache (an LRU of 100) holds, so with
+    the default every rerun recompiled nearly all of them inside its
+    tasks; session.py sizes the cache to the working set and keeps
+    AQE's stage numbering out of the generated source."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+
+    def one_pass():
+        for name in SHORT_HEADLINE:
+            QUERIES[name](spark, sf_dir).collect()
+
+    one_pass()
+    before = compiles.getCount()
+    one_pass()
+    assert compiles.getCount() == before
