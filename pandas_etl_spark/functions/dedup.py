@@ -51,7 +51,7 @@ def normalized(col: str = "text") -> Column:
     return F.regexp_replace(F.lower(F.trim(F.col(col))), r"\s+", " ")
 
 
-from pandas_etl_spark.sources.io import ensure_parallelism  # noqa: E402
+from pandas_etl_spark.sources.io import ensure_parallelism, read_parquet  # noqa: E402
 
 
 def _shingle_arr(norm_col: str, k: int) -> Column:
@@ -1624,10 +1624,10 @@ def incremental_dedup_indexed(
         id_col,
         meta["k"],
         threshold,
-        spark.read.parquet(os.path.join(index_path, "fp")),
-        spark.read.parquet(os.path.join(index_path, "stop")),
-        spark.read.parquet(os.path.join(index_path, "postings")),
-        spark.read.parquet(os.path.join(index_path, "sizes")),
+        read_parquet(spark, os.path.join(index_path, "fp")),
+        read_parquet(spark, os.path.join(index_path, "stop")),
+        read_parquet(spark, os.path.join(index_path, "postings")),
+        read_parquet(spark, os.path.join(index_path, "sizes")),
     )
 
 
@@ -1656,7 +1656,7 @@ def append_to_dedup_index(
     spark = novel_df.sparkSession
     with open(os.path.join(index_path, "_meta.json")) as f:
         meta = json.load(f)
-    stop = spark.read.parquet(os.path.join(index_path, "stop"))
+    stop = read_parquet(spark, os.path.join(index_path, "stop"))
     sh = char_shingles(novel_df, text_col, id_col, meta["k"]).join(
         stop, "shingle", "left_anti"
     )

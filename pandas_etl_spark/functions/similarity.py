@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from pandas_etl_spark.sources.io import ensure_parallelism
+from pandas_etl_spark.sources.io import ensure_parallelism, read_parquet
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -1041,7 +1041,7 @@ def ann_ivf_indexed(
     probed = sorted(
         {r["cell"] for r in qcells.select("cell").distinct().collect()}
     )
-    vectors = spark.read.parquet(os.path.join(index_path, "vectors")).filter(
+    vectors = read_parquet(spark, os.path.join(index_path, "vectors")).filter(
         F.col("cell").isin(probed)
     )
     cand = (

@@ -1437,8 +1437,10 @@ def _read_span_index(spark, path: str) -> tuple[DataFrame, int]:
     import json
     import os
 
+    from pandas_etl_spark.sources.io import read_parquet
+
     meta = json.loads(spark.read.text(os.path.join(path, "_meta.json")).first()[0])
-    return spark.read.parquet(os.path.join(path, "grams")), int(meta["k"])
+    return read_parquet(spark, os.path.join(path, "grams")), int(meta["k"])
 
 
 def span_dedup_indexed(

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pandas_etl_spark.sources.io import read_parquet
+
 
 def row_hash(cols: list[str]) -> Column:
     """60-bit md5-prefix hash of the canonical row encoding
@@ -79,7 +81,7 @@ def to_parquet_with_manifest(
 
     df.write.mode(mode).parquet(path)
     spark = df.sparkSession
-    written = spark.read.parquet(path)
+    written = read_parquet(spark, path)
     if cols is None:
         cols = [c for c, t in written.dtypes if t in _PORTABLE_TYPES]
         if not cols:
@@ -111,7 +113,7 @@ def verify_manifest(spark, path: str) -> dict:
     import json
 
     manifest = json.loads(spark.read.text(f"{path}/_manifest").first()["value"])
-    data = spark.read.parquet(path)
+    data = read_parquet(spark, path)
     row = table_checksum(data, manifest["columns"], manifest.get("key_col")).first()
     ok = row["n_rows"] == manifest["n_rows"] and row["xor_hash"] == manifest["xor_hash"]
     out = dict(manifest)

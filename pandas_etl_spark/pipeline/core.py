@@ -13,6 +13,16 @@ driver; Catalyst fuses the whole step graph, so cross-step pushdown and
 column pruning come free — the reference's per-step eager materialization
 is exactly what we do NOT copy (SURVEY §4). Sinks/checkpoints are the
 only actions; independent ones run concurrently per wavefront wave.
+
+Checkpoints (``saveProgress``). Once a ``.parquet`` checkpoint commits,
+the step's output becomes a scan of the checkpoint, read back the same
+way a resumed run reads it (``read_checkpoint``). Downstream steps then
+start from the saved rows instead of recomputing the step's lineage, so
+a fresh run and a resumed run build the same downstream plans. A
+``.csv`` checkpoint is written but the output keeps its lineage: a CSV
+read-back would re-infer every column type. Under ``--explain`` nothing
+is written and nothing is read back. A resumed run (``resumeFromSaved``,
+the default) skips a step whose checkpoint holds a ``_SUCCESS`` marker.
 """
 
 from __future__ import annotations
@@ -183,7 +193,9 @@ class Pipeline:
 
     # -- step execution (called by _Steps.run) --------------------------------
 
-    def run_step(self, step: _Step) -> None:
+    def run_step(self, step: _Step) -> str:
+        """Run one step; returns what its time covered, for the step log
+        line."""
         handle = self._resolve_function(step.function)
         if not callable(handle):
             raise TypeError(
@@ -208,11 +220,25 @@ class Pipeline:
             step.output = handle(*args)
         else:
             step.output = handle(args)
+        covered = (
+            "built its lazy plan"
+            if isinstance(step.output, Table) or hasattr(step.output, "write")
+            else "ran an action (sink write or other eager call)"
+        )
         if step.saveProgress:
             path = self.resolver.resolve(step.saveProgress)
-            self.write_checkpoint(step.output, path)
+            if not self.write_checkpoint(step.output, path):
+                covered += " (--explain: checkpoint not written)"
+            elif path.lower().endswith(".parquet"):
+                # the committed checkpoint becomes the output, so downstream
+                # steps scan it instead of recomputing its lineage
+                step.output = self.read_checkpoint(path)
+                covered = "wrote its parquet checkpoint and read it back"
+            else:
+                covered = "wrote its csv checkpoint"
             logger.info("Saving output of steps['%s'] to: %s", step.name, path)
         logger.info("Finished pipeline steps['%s']", step.name)
+        return covered
 
     # -- checkpoints (F15/F16) -------------------------------------------------
 
@@ -234,7 +260,9 @@ class Pipeline:
             return os.path.exists(os.path.join(path, "_SUCCESS"))
         return True  # plain file (non-Spark-written): existence is commit
 
-    def write_checkpoint(self, output: Any, path: str) -> None:
+    def write_checkpoint(self, output: Any, path: str) -> bool:
+        """Write ``output`` to ``path``; False when --explain skipped the
+        write."""
         df = output.df if isinstance(output, Table) else output
         if not hasattr(df, "write"):
             raise ValueError(
@@ -243,7 +271,7 @@ class Pipeline:
         from pandas_etl_spark.pandas_ops import _explain_sink
 
         if _explain_sink(df, "checkpoint", path):  # --explain dry run
-            return
+            return False
         ext = path.rsplit(".", 1)[-1].lower()
         from pandas_etl_spark.sources import io as _io
 
@@ -256,6 +284,7 @@ class Pipeline:
                 f"saveProgress supports .csv or .parquet, got: {path!r} "
                 "(the reference silently ignored other extensions — we refuse)"
             )
+        return True
 
     def read_checkpoint(self, path: str) -> Table:
         ext = path.rsplit(".", 1)[-1].lower()

@@ -241,10 +241,11 @@ class _Steps:
                     import time
 
                     t0 = time.perf_counter()
-                    self._engine.run_step(step)
+                    covered = self._engine.run_step(step)
                     logger.info(
-                        "step '%s' completed in %.2fs (wave %d)",
+                        "step '%s' %s in %.2fs (wave %d)",
                         step.name,
+                        covered,
                         time.perf_counter() - t0,
                         wave,
                     )

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pandas_etl_spark.sources.io import read_parquet
+
 _INT_RANK = {T.ByteType: 1, T.ShortType: 2, T.IntegerType: 3, T.LongType: 4}
 _FRAC_RANK = {T.FloatType: 1, T.DoubleType: 2}
 
@@ -101,7 +103,7 @@ def read_parquet_evolved(
     (a literal per branch — free, and pushdown-friendly)."""
     if not paths:
         raise ValueError("read_parquet_evolved needs at least one path")
-    frames = [spark.read.parquet(p) for p in paths]
+    frames = [read_parquet(spark, p) for p in paths]
     target = evolved_schema([df.schema for df in frames], on_conflict)
     aligned = []
     for i, df in enumerate(frames):

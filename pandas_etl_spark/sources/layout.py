@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pandas_etl_spark.sources.io import read_parquet
+
 _RANGEABLE = (T.NumericType, T.DateType, T.TimestampType, T.TimestampNTZType)
 
 
@@ -123,7 +125,7 @@ def compact_parquet(
     to ``out_path`` (a distinct directory): rewriting a table in place
     is only safe under a transactional commit protocol, which plain
     parquet directories don't have. Returns the target file count."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     total = 0
     for uri in df.inputFiles():
         from urllib.parse import unquote, urlparse

@@ -12,6 +12,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pandas_etl_spark.sources.io import read_parquet
+
 
 def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Any test table's parquet as a file stream (schema from the batch
@@ -26,7 +28,7 @@ def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from pandas_etl_spark.sources.io import nanos_columns, normalize_nanos_ts
 
     path = f"{sf_dir}/{name}.parquet"
-    batch = spark.read.parquet(path)
+    batch = read_parquet(spark, path)
     reader = spark.readStream.schema(batch.schema).format("parquet")
     if os.path.isdir(path):
         stream = reader.load(path)
@@ -126,7 +128,7 @@ def dedup_ingest_sink(
         """Index the just-written partition (post-materialization read —
         append_to_dedup_index's materialize-first rule)."""
         try:
-            written = spark.read.parquet(corpus_path).where(
+            written = read_parquet(spark, corpus_path).where(
                 F.col("__batch") == batch_id
             )
             if not written.head(1):
@@ -144,7 +146,7 @@ def dedup_ingest_sink(
                 .write.mode("overwrite")
                 .parquet(os.path.join(idx, "stop"))
             )
-        stop = written.sparkSession.read.parquet(os.path.join(idx, "stop"))
+        stop = read_parquet(written.sparkSession, os.path.join(idx, "stop"))
         sh = char_shingles(written, text_col, id_col, k).join(
             stop, "shingle", "left_anti"
         )
@@ -179,10 +181,10 @@ def dedup_ingest_sink(
                     id_col,
                     k,
                     threshold,
-                    spark.read.parquet(os.path.join(idx, "fp")).where(notme),
-                    spark.read.parquet(os.path.join(idx, "stop")),
-                    spark.read.parquet(os.path.join(idx, "postings")).where(notme),
-                    spark.read.parquet(os.path.join(idx, "sizes")).where(notme),
+                    read_parquet(spark, os.path.join(idx, "fp")).where(notme),
+                    read_parquet(spark, os.path.join(idx, "stop")),
+                    read_parquet(spark, os.path.join(idx, "postings")).where(notme),
+                    read_parquet(spark, os.path.join(idx, "sizes")).where(notme),
                 )
                 novel = batch_df.join(
                     cls.filter(F.col("status") == "novel").select(id_col),
@@ -195,7 +197,7 @@ def dedup_ingest_sink(
             _append_index(spark, batch_id)
             return
         try:
-            corpus = spark.read.parquet(corpus_path).where(
+            corpus = read_parquet(spark, corpus_path).where(
                 F.col("__batch") != batch_id  # replay: don't self-compare
             )
             have_corpus = bool(corpus.head(1))
@@ -255,9 +257,7 @@ def cdc_apply_sink(
         )
         if not vs:
             return -1, base
-        return vs[-1], spark.read.parquet(
-            os.path.join(snapshot_path, f"v{vs[-1]}")
-        )
+        return vs[-1], read_parquet(spark, os.path.join(snapshot_path, f"v{vs[-1]}"))
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -303,9 +303,7 @@ def hll_ingest_sink(
         )
         if not vs:
             return -1, None
-        return vs[-1], spark.read.parquet(
-            os.path.join(rollup_path, f"v{vs[-1]}")
-        )
+        return vs[-1], read_parquet(spark, os.path.join(rollup_path, f"v{vs[-1]}"))
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -348,7 +346,7 @@ def read_snapshot_version(spark, snapshot_path: str, version: int | None = None)
         raise FileNotFoundError(
             f"snapshot v{version} not in {snapshot_path} (have {versions})"
         )
-    return spark.read.parquet(os.path.join(snapshot_path, f"v{version}"))
+    return read_parquet(spark, os.path.join(snapshot_path, f"v{version}"))
 
 
 def vacuum_snapshot_versions(snapshot_path: str, keep_last: int = 2) -> list[int]:
@@ -446,7 +444,7 @@ def span_dedup_ingest_sink(
         spark = batch_df.sparkSession
         try:
             grams = (
-                spark.read.parquet(idx_path)
+                read_parquet(spark, idx_path)
                 .filter(F.col("__batch") != batch_id)
                 .select("gh")
             )
@@ -551,8 +549,8 @@ def mv_maintain_sink(
             applied = int(fh.read().strip() or -1)
         return (
             v,
-            spark.read.parquet(os.path.join(state_path, f"v{v}", "snapshot")),
-            spark.read.parquet(os.path.join(state_path, f"v{v}", "mv")),
+            read_parquet(spark, os.path.join(state_path, f"v{v}", "snapshot")),
+            read_parquet(spark, os.path.join(state_path, f"v{v}", "mv")),
             applied,
         )
 

@@ -368,7 +368,12 @@ class TestStepProgressReporting:
             p.run()
         text = caplog.text
         assert "wave 1: 1 step(s) ready: ['pd.read_csv']" in text
-        assert "step 'pd.read_csv' completed in" in text
+        # the time of a lazy step and of a sink are told apart
+        assert "step 'pd.read_csv' built its lazy plan in" in text
+        assert (
+            "step 'pd.read_csv.groupby.max.to_csv' ran an action "
+            "(sink write or other eager call) in"
+        ) in text
         assert "progress: 4/4 steps complete" in text
 
 
@@ -929,3 +934,98 @@ def test_r6_operators_as_yaml_bound_methods(spark, sf_dir):
         r["bucket"]: (r["n_rows"], r["bal_cents"]) for r in direct.collect()
     }
     assert got == want
+
+
+class TestCheckpointReadBack:
+    """A committed ``.parquet`` saveProgress becomes the step's output,
+    so downstream steps scan the checkpoint instead of recomputing the
+    upstream join. CSV checkpoints keep their lineage; ``--explain``
+    writes and reads nothing."""
+
+    @staticmethod
+    def _yaml(sf_dir, ckpt, sink):
+        return f"""
+        steps:
+        - name: orders
+          function: pd.read_parquet
+          args:
+            path: {sf_dir}/orders.parquet
+        - name: customer
+          function: pd.read_parquet
+          args:
+            path: {sf_dir}/customer.parquet
+        - name: joined
+          function: pd.merge
+          args:
+            left: ${{ steps['orders'].output }}
+            right: ${{ steps['customer'].output }}
+            left_on: o_custkey
+            right_on: c_custkey
+          saveProgress: {ckpt}
+        - name: per_segment
+          function: sql
+          args:
+            query: >-
+              SELECT c_mktsegment, count(*) AS n,
+              round(sum(o_totalprice), 2) AS total FROM j GROUP BY c_mktsegment
+            views:
+              j: ${{ steps['joined'].output }}
+        - ${{ steps['per_segment'].output.to_parquet }}:
+            path: {sink}
+        """
+
+    @staticmethod
+    def _scanned(p):
+        return p.steps["per_segment"].output.df.inputFiles()
+
+    @staticmethod
+    def _rows(spark, path):
+        return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    def test_parquet_checkpoint_feeds_downstream_and_matches_resume(
+        self, spark, sf_dir, tmp_path
+    ):
+        ckpt = str(tmp_path / "joined.parquet")
+        fresh_sink, resumed_sink = str(tmp_path / "fresh"), str(tmp_path / "resumed")
+        fresh = Pipeline(yamlData=self._yaml(sf_dir, ckpt, fresh_sink), spark=spark)
+        fresh.run()
+        scanned = self._scanned(fresh)
+        assert scanned and all(f.startswith(f"file://{ckpt}/") for f in scanned), scanned
+        assert not any("orders.parquet" in f or "customer.parquet" in f for f in scanned)
+
+        resumed = Pipeline(yamlData=self._yaml(sf_dir, ckpt, resumed_sink), spark=spark)
+        resumed.run()
+        assert sorted(self._scanned(resumed)) == sorted(scanned)
+        rows = self._rows(spark, fresh_sink)
+        assert rows and rows == self._rows(spark, resumed_sink)
+
+    def test_csv_checkpoint_keeps_lineage(self, spark, sf_dir, tmp_path):
+        ckpt = str(tmp_path / "joined.csv")
+        p = Pipeline(
+            yamlData=self._yaml(sf_dir, ckpt, str(tmp_path / "sink")), spark=spark
+        )
+        p.run()
+        assert os.path.exists(os.path.join(ckpt, "_SUCCESS"))
+        scanned = self._scanned(p)
+        assert any(f.endswith("/orders.parquet") for f in scanned), scanned
+        assert not any(ckpt in f for f in scanned)
+
+    def test_explain_writes_and_reads_nothing(
+        self, spark, sf_dir, tmp_path, monkeypatch, capsys
+    ):
+        from pandas_etl_spark.pandas_ops import EXPLAIN_ONLY
+
+        def no_read(self, path):
+            raise AssertionError(f"--explain read checkpoint {path}")
+
+        monkeypatch.setattr(Pipeline, "read_checkpoint", no_read)
+        ckpt, sink = str(tmp_path / "joined.parquet"), str(tmp_path / "sink")
+        p = Pipeline(yamlData=self._yaml(sf_dir, ckpt, sink), spark=spark)
+        token = EXPLAIN_ONLY.set(True)
+        try:
+            p.run()
+        finally:
+            EXPLAIN_ONLY.reset(token)
+        assert "EXPLAIN sink checkpoint" in capsys.readouterr().out
+        assert not os.path.exists(ckpt) and not os.path.exists(sink)
+        assert any(f.endswith("/orders.parquet") for f in self._scanned(p))

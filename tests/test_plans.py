@@ -920,3 +920,20 @@ def test_rerun_reuses_generated_classes(spark, sf_dir):
     before = compiles.getCount()
     one_pass()
     assert compiles.getCount() == before
+
+
+def test_plan_build_runs_no_spark_job(spark, sf_dir):
+    """Building a plan over files it has read before runs no Spark job.
+    Without a schema, every parquet read infers one with a one-task job;
+    ``sources.io.read_parquet`` memoizes the inferred schema by file
+    identity, so a second build of each short headline query submits
+    nothing."""
+    jobs = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs
+    for name in SHORT_HEADLINE:
+        QUERIES[name](spark, sf_dir)
+    ran = {}
+    for name in SHORT_HEADLINE:
+        before = jobs()
+        QUERIES[name](spark, sf_dir)
+        ran[name] = jobs() - before
+    assert not any(ran.values()), ran
