@@ -1411,6 +1411,22 @@ def q_l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MH_PERMS = 64
 
 
+def _source_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (source, gram) word 5-grams — the item set each source
+    signature sketches."""
+    from pandas_etl_spark.functions.text import tokens, word_ngrams
+
+    docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
+    return (
+        docs.select("source", tokens("text").alias("t"))
+        .select(
+            "source",
+            F.explode(F.array_distinct(word_ngrams("t", 5))).alias("gram"),
+        )
+        .distinct()
+    )
+
+
 @query("minhash_source_signature")
 def q_minhash_source_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-path twin of source_overlap_jaccard: every source reduces
@@ -1424,18 +1440,7 @@ def q_minhash_source_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only (xxhash64 is engine-specific);
     tests/test_curation_ops.py bounds the estimate against the exact
     gram Jaccard at the standard 1/sqrt(64) MinHash error."""
-    from pandas_etl_spark.functions.text import tokens, word_ngrams
-
-    docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    g = (
-        docs.select("source", tokens("text").alias("t"))
-        .select(
-            "source",
-            F.explode(F.array_distinct(word_ngrams("t", 5))).alias("gram"),
-        )
-        .distinct()
-    )
-    sig = g.groupBy("source").agg(
+    sig = _source_grams(spark, sf_dir).groupBy("source").agg(
         F.array(
             *[
                 F.min(F.xxhash64("gram", F.lit(i)))
@@ -1443,20 +1448,25 @@ def q_minhash_source_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         ).alias("sig")
     )
+    return _compare_source_signatures(sig, _MH_PERMS)
+
+
+def _compare_source_signatures(sig: DataFrame, n: int) -> DataFrame:
+    """All source pairs of ``(source, sig)`` with the number of agreeing
+    signature positions and its share — a |sources|² broadcast compare
+    scored by the flat CASE-sum of functions/dedup.signature_agreement."""
+    from pandas_etl_spark.functions.dedup import signature_agreement
+
     a = sig.select(F.col("source").alias("source_a"), F.col("sig").alias("sa"))
     b = sig.select(F.col("source").alias("source_b"), F.col("sig").alias("sb"))
-    pairs = a.join(F.broadcast(b), F.col("source_a") < F.col("source_b"))
-    matches = F.size(
-        F.filter(
-            F.zip_with(F.col("sa"), F.col("sb"), lambda x, y: x == y),
-            lambda t: t,
-        )
-    )
-    return pairs.select(
+    matches = signature_agreement("sa[{}]", "sb[{}]", n)
+    return a.join(
+        F.broadcast(b), F.col("source_a") < F.col("source_b")
+    ).selectExpr(
         "source_a",
         "source_b",
-        matches.cast("bigint").alias("n_matching_perms"),
-        F.round(matches / F.lit(float(_MH_PERMS)), 6).alias("est_jaccard"),
+        f"cast({matches} as bigint) as n_matching_perms",
+        f"round(({matches}) / {float(n)}D, 6) as est_jaccard",
     )
 
 
@@ -1624,9 +1634,10 @@ _MHSIG_PERMS = 16
 
 
 def _mh_sig_checked_oracle() -> str:
-    """Portable-MinHash source signatures in SQL: 40-bit md5 gram
-    hashes + the same small-coefficient permutations as
-    functions/dedup.portable_perm_params — every min() exact int64."""
+    """md5-MinHash source signatures in SQL (functions/dedup
+    minhash_sketch under ``hash="md5"``): 40-bit md5 gram hashes + the
+    small-coefficient permutations of portable_perm_params — every
+    min() exact int64."""
     from pandas_etl_spark.functions.dedup import _P40, portable_perm_params
 
     params = portable_perm_params(_MHSIG_PERMS, seed=42)
@@ -1666,61 +1677,20 @@ def _mh_sig_checked_oracle() -> str:
 def q_minhash_source_signature_checked(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Oracle-CHECKED portable twin of minhash_source_signature (whose
-    xxhash64 sketch is engine-specific): 40-bit md5 gram hashes under
-    the small-coefficient portable permutations — every intermediate an
-    exact int64, so the per-source signatures and the signature-compare
-    similarity hash-match cross-engine. Same shape: distinct
-    (source, gram) reduction, ONE source-keyed aggregate folding all 16
-    mins map-side, |sources|² broadcast compare."""
-    from pandas_etl_spark.functions.dedup import (
-        _P40,
-        portable_perm_params,
-    )
-    from pandas_etl_spark.functions.text import tokens, word_ngrams
+    """Oracle-CHECKED twin of minhash_source_signature (whose seeded
+    xxhash64 sketch is engine-specific): the functions/dedup
+    minhash_sketch under ``hash="md5"`` — 40-bit md5 gram hashes and
+    small-coefficient permutations, every intermediate an exact int64,
+    so the per-source signatures and the signature-compare similarity
+    hash-match cross-engine. Same shape: distinct (source, gram)
+    reduction, ONE source-keyed aggregate folding all 16 mins map-side,
+    |sources|² broadcast compare."""
+    from pandas_etl_spark.functions.dedup import minhash_sketch
 
-    params = portable_perm_params(_MHSIG_PERMS, seed=42)
-    docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    g = (
-        docs.select("source", tokens("text").alias("t"))
-        .select(
-            "source",
-            F.explode(F.array_distinct(word_ngrams("t", 5))).alias("gram"),
-        )
-        .distinct()
+    sig = minhash_sketch(
+        _source_grams(spark, sf_dir), "source", "gram", _MHSIG_PERMS, 42, "md5"
     )
-    h = g.select(
-        "source",
-        F.expr(
-            "cast(conv(substring(md5(gram), 1, 10), 16, 10) as bigint)"
-        ).alias("h"),
-    )
-    sig = h.groupBy("source").agg(
-        *[
-            F.min(F.expr(f"(h * {a}L + {b}L) % {_P40}L")).alias(f"m{i}")
-            for i, (a, b) in enumerate(params)
-        ]
-    )
-    a = sig.select(
-        F.col("source").alias("source_a"),
-        *[F.col(f"m{i}").alias(f"am{i}") for i in range(_MHSIG_PERMS)],
-    )
-    b = sig.select(
-        F.col("source").alias("source_b"),
-        *[F.col(f"m{i}").alias(f"bm{i}") for i in range(_MHSIG_PERMS)],
-    )
-    matches = None
-    for i in range(_MHSIG_PERMS):
-        term = F.when(F.col(f"am{i}") == F.col(f"bm{i}"), 1).otherwise(0)
-        matches = term if matches is None else matches + term
-    return a.join(
-        F.broadcast(b), F.col("source_a") < F.col("source_b")
-    ).select(
-        "source_a",
-        "source_b",
-        matches.cast("bigint").alias("n_matching_perms"),
-        F.round(matches * 1.0 / _MHSIG_PERMS, 6).alias("est_jaccard"),
-    )
+    return _compare_source_signatures(sig, _MHSIG_PERMS)
 
 
 @query(

@@ -322,8 +322,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_portable_oracle(num_perm: int = 32, bands: int = 8, k: int = 5, threshold: float = 0.4) -> str:
-    """Generate the DuckDB SQL replicating minhash_lsh_pairs_portable
-    bit-for-bit (same md5-derived 40-bit hashes, same permutations)."""
+    """Generate the DuckDB SQL replicating minhash_lsh_pairs(hash="md5",
+    max_bucket=None) bit-for-bit (same md5-derived 40-bit hashes, same
+    permutations, same concatenated band keys)."""
     params = dd.portable_perm_params(num_perm)
     rows = num_perm // bands
     sig_cols = ",\n           ".join(
@@ -373,13 +374,15 @@ def _minhash_portable_oracle(num_perm: int = 32, bands: int = 8, k: int = 5, thr
 
 @query("minhash_lsh_pairs_checked", oracle=_minhash_portable_oracle())
 def q_minhash_lsh_pairs_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-reproducible MinHash-LSH (md5-derived 40-bit hashes, int64
-    exact arithmetic, concatenated-signature band buckets) — proves the
-    LSH pipeline end-to-end against DuckDB. The xxhash64 variant below is
-    the faster production path."""
+    """Oracle-reproducible MinHash-LSH: the production operator under
+    ``hash="md5"`` (md5-derived 40-bit hashes, int64-exact arithmetic,
+    concatenated-signature band buckets) — proves the LSH pipeline
+    end-to-end against DuckDB. minhash_lsh_pairs runs the same operator
+    on xxhash64, the faster engine-native scheme."""
     d = load_table(spark, sf_dir, "documents")
-    return dd.minhash_lsh_pairs_portable(
-        d, "text", "doc_id", num_perm=32, bands=8, k=5, threshold=0.4
+    return dd.minhash_lsh_pairs(
+        d, "text", "doc_id", num_perm=32, bands=8, k=5, threshold=0.4,
+        max_bucket=None, hash="md5",
     )
 
 
@@ -620,7 +623,7 @@ def q_dedup_multi_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_portable_oracle(bits: int = 60) -> str:
-    """DuckDB SQL replicating simhash_signatures_portable bit-for-bit:
+    """DuckDB SQL replicating simhash_signatures(hash="md5") bit-for-bit:
     same md5-prefix token hash, same ±1 votes, same sign rule."""
     hexdigits = (bits + 3) // 4
     votes = ",\n               ".join(
@@ -652,14 +655,14 @@ def _simhash_portable_oracle(bits: int = 60) -> str:
 @query("simhash_checked", oracle=_simhash_portable_oracle(60))
 def q_simhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bit-exact oracle check of the SimHash signature computation
-    (portable md5-token-hash variant, 60 bits — every intermediate exact
-    in int64 on any ANSI engine). The production simhash_pairs keeps
-    xxhash64 (engine-native, no DuckDB equivalent → rows-only there);
-    THIS query proves the vote/sign pipeline itself, and the
-    radius-blocking layer on top is hash-agnostic (property-tested
-    exhaustively in tests/test_operators.py)."""
+    (``hash="md5"``: 60-bit md5 token hashes — every intermediate exact
+    in int64 on any ANSI engine). The production simhash_pairs runs the
+    same operator on xxhash64 (engine-native, no DuckDB equivalent →
+    rows-only there); THIS query proves the vote/sign pipeline itself,
+    and the radius-blocking layer on top is hash-agnostic
+    (property-tested exhaustively in tests/test_operators.py)."""
     d = load_table(spark, sf_dir, "documents")
-    return dd.simhash_signatures_portable(d, "text", "doc_id", bits=60).select(
+    return dd.simhash_signatures(d, "text", "doc_id", hash="md5").select(
         F.col("id").alias("doc_id"), "sim"
     )
 
@@ -745,15 +748,15 @@ _SIMHASH_PAIR_RADIUS = 4
     """,
 )
 def q_simhash_pairs_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end oracle check of the SimHash PAIR path: portable 60-bit
-    signatures (md5 token hashes — see simhash_checked) fed through the
+    """End-to-end oracle check of the SimHash PAIR path: 60-bit md5
+    signatures (``hash="md5"`` — see simhash_checked) fed through the
     production pigeonhole-blocked neighbor join (radius 4 → 5 exact
     chunks), against a brute-force all-pairs hamming oracle. Proves the
     blocking loses nothing at this radius on real data, complementing
     the synthetic exhaustive property test; production simhash_pairs
     runs the same blocking over xxhash64 signatures."""
     d = load_table(spark, sf_dir, "documents")
-    sigs = dd.simhash_signatures_portable(d, "text", "doc_id", bits=60)
+    sigs = dd.simhash_signatures(d, "text", "doc_id", hash="md5")
     return dd.simhash_neighbors(sigs, max_hamming=_SIMHASH_PAIR_RADIUS)
 
 
@@ -801,7 +804,7 @@ def q_doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _recall_audit_oracle(threshold: float = 0.4) -> str:
     """exact-vs-LSH pair agreement, both sides oracle-reproducible: the
-    portable-MinHash LSH SQL (md5 40-bit hashes) joined against the
+    md5-MinHash LSH SQL (40-bit hashes) joined against the
     exact n-gram Jaccard pairs at the same threshold."""
     return f"""
     WITH lsh AS (
@@ -843,24 +846,17 @@ def _recall_audit_oracle(threshold: float = 0.4) -> str:
     """
 
 
-@query("dedup_recall_audit_checked", oracle=_recall_audit_oracle())
-def q_dedup_recall_audit_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-verified twin of dedup_recall_audit (r7 VERDICT #7 —
-    converting the justified-rows-only tail where a deterministic twin
-    is cheap): the SAME precision/recall audit computed on the
-    PORTABLE MinHash-LSH (md5 40-bit hashes, int64-exact permutations,
-    as minhash_lsh_pairs_checked) against the exact n-gram Jaccard
-    pairs at the same threshold — so the entire audit (both pair sets,
-    the agreement join, the summary ratios) is reproduced by the
-    DuckDB oracle. The xxhash64 production audit keeps its rows-only
-    row; this twin earns the hash-verified one."""
+def _recall_audit(spark: SparkSession, sf_dir: str, t: float, **lsh_kw) -> DataFrame:
+    """One-row pair-level precision/recall of minhash_lsh_pairs(**lsh_kw)
+    against the exact n-gram Jaccard pairs, both at threshold ``t``.
+    Built lazily: the three counts are one-row aggregates cross-joined
+    together, so building the plan runs no Spark job."""
     d = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    t = 0.4
     exact = dd.ngram_jaccard_pairs(
         d, "text", "doc_id", k=_K, threshold=t, max_df=_MAX_DF
     ).select("id_a", "id_b")
-    lsh = dd.minhash_lsh_pairs_portable(
-        d, "text", "doc_id", num_perm=32, bands=8, k=_K, threshold=t
+    lsh = dd.minhash_lsh_pairs(
+        d, "text", "doc_id", k=_K, threshold=t, **lsh_kw
     ).select("id_a", "id_b")
     hit = exact.join(lsh, ["id_a", "id_b"], "left_semi")
     ne = exact.agg(F.count(F.lit(1)).alias("ne"))
@@ -883,6 +879,22 @@ def q_dedup_recall_audit_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("dedup_recall_audit_checked", oracle=_recall_audit_oracle())
+def q_dedup_recall_audit_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hash-verified twin of dedup_recall_audit (r7 VERDICT #7 —
+    converting the justified-rows-only tail where a deterministic twin
+    is cheap): the SAME precision/recall audit computed on the md5
+    MinHash-LSH (``hash="md5"``: 40-bit hashes, int64-exact
+    permutations, as minhash_lsh_pairs_checked) against the exact
+    n-gram Jaccard pairs at the same threshold — so the entire audit
+    (both pair sets, the agreement join, the summary ratios) is
+    reproduced by the DuckDB oracle. The xxhash64 production audit
+    keeps its rows-only row; this twin earns the hash-verified one."""
+    return _recall_audit(
+        spark, sf_dir, 0.4, num_perm=32, bands=8, max_bucket=None, hash="md5"
+    )
+
+
 @query("dedup_recall_audit")
 def q_dedup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pair-level precision/recall of the MinHash-LSH near-dup path
@@ -897,29 +909,7 @@ def q_dedup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair sets are id-only frames; the audit joins cost two small
     shuffles on (id_a, id_b). Rows-only driver check (xxhash64
     signatures are engine-specific)."""
-    d = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    t = 0.5
-    exact = dd.ngram_jaccard_pairs(
-        d, "text", "doc_id", k=5, threshold=t, max_df=50
-    ).select("id_a", "id_b")
-    lsh = dd.minhash_lsh_pairs(
-        d, "text", "doc_id", num_perm=64, bands=16, k=5, threshold=t
-    ).select("id_a", "id_b")
-    hit = exact.join(lsh, ["id_a", "id_b"], "left_semi")
-    n_exact = exact.count()
-    n_lsh = lsh.count()
-    n_hit = hit.count()
-    return spark.createDataFrame(
-        [(
-            n_exact,
-            n_lsh,
-            n_hit,
-            round(n_hit / n_lsh, 4) if n_lsh else 1.0,
-            round(n_hit / n_exact, 4) if n_exact else 1.0,
-        )],
-        "exact_pairs long, lsh_pairs long, agreeing_pairs long, "
-        "precision double, recall double",
-    )
+    return _recall_audit(spark, sf_dir, 0.5, num_perm=64, bands=16)
 
 
 @query(

@@ -23,6 +23,10 @@ Everything is built-in Catalyst expressions; no Python on the hot path.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import partial
+from typing import NamedTuple
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -538,6 +542,102 @@ def ngram_jaccard_pairs_prefix(
     )
 
 
+# Sketch hash schemes, selected by the ``hash`` argument of the MinHash and
+# SimHash operators. "xxhash64" is the production scheme (engine-native,
+# fastest). "md5" takes the item hash from the md5 hex prefix (40 bits for
+# MinHash, 60 for SimHash) and mixes it with small-coefficient
+# permutations, so every intermediate fits int64 exactly and an ANSI-SQL
+# engine (the DuckDB oracles) reproduces the signatures bit-for-bit. Its
+# band bucket key is the concatenated signature slice, portable across
+# engines unlike murmur3 ``F.hash``. Shingling, the aggregates, the
+# banding, the skew guard and the verification are shared by both.
+_P40 = 1099511627689  # prime > 2^40
+
+
+def portable_perm_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
+    """(a, b) with a < 2^20, b < 2^40: h*a+b < 2^61 — exact in int64."""
+    return [
+        ((a % ((1 << 20) - 1)) + 1, b % _P40) for a, b in _perm_params(num_perm, seed)
+    ]
+
+
+class _SketchHash(NamedTuple):
+    minhash_h: str  # SQL over the item column {} -> non-negative bigint
+    perm_params: Callable[[int, int], list[tuple[int, int]]]
+    mix: str  # SQL permuting h with coefficients {a}, {b}
+    band_key: Callable[..., Column]  # signature slice -> LSH bucket key
+    simhash_h: str  # SQL over the token column {} -> simhash_bits-wide bigint
+    simhash_bits: int
+
+
+_SKETCH_HASHES = {
+    "xxhash64": _SketchHash(
+        "abs(xxhash64({}))",
+        _perm_params,
+        f"pmod(h * {{a}}L + {{b}}L, {_PRIME}L)",
+        F.hash,
+        "xxhash64({})",
+        64,
+    ),
+    "md5": _SketchHash(
+        "cast(conv(substring(md5({}), 1, 10), 16, 10) as bigint)",
+        portable_perm_params,
+        f"(h * {{a}}L + {{b}}L) % {_P40}L",
+        partial(F.concat_ws, "-"),
+        "cast(conv(substring(md5({}), 1, 15), 16, 10) as bigint)",
+        60,
+    ),
+}
+
+
+def _sketch_hash(hash: str) -> _SketchHash:
+    if hash not in _SKETCH_HASHES:
+        raise ValueError(f"hash must be one of {sorted(_SKETCH_HASHES)}, got {hash!r}")
+    return _SKETCH_HASHES[hash]
+
+
+def signature_agreement(a: str, b: str, n: int) -> str:
+    """SQL counting the positions where two ``n``-long signatures agree;
+    ``a`` and ``b`` template the i-th element (``"sa[{}]"``, ``"__sa{}"``).
+
+    A flat CASE-sum is whole-stage codegen'd. A
+    size(filter(zip_with(...))) fold is a CodegenFallback chain that
+    drops the per-pair projection to interpreted eval, and an n-term
+    Column chain costs seconds of py4j plan-build time."""
+    return " + ".join(
+        f"(CASE WHEN {a.format(i)} = {b.format(i)} THEN 1 ELSE 0 END)"
+        for i in range(n)
+    )
+
+
+def minhash_sketch(
+    items: DataFrame,
+    key: str,
+    item: str,
+    num_perm: int = 64,
+    seed: int = 42,
+    hash: str = "xxhash64",
+) -> DataFrame:
+    """(key, sig array<bigint>) MinHash signature of each key's item set.
+
+    Plan: one groupBy(key) carrying ``num_perm`` plain ``min(mix(h))``
+    aggregates. All aggregates are whole-stage codegen'd; the per-row
+    higher-order-function variant (array_min∘transform, interpreted per
+    element) measured ~10× slower. One shuffle on key with map-side
+    partial mins — scale-friendly, and mergeable (min is associative)."""
+    s = _sketch_hash(hash)
+    hashed = items.select(key, F.expr(s.minhash_h.format(item)).alias("h"))
+    aggs = [
+        F.min(F.expr(s.mix.format(a=a, b=b))).alias(f"m{i}")
+        for i, (a, b) in enumerate(s.perm_params(num_perm, seed))
+    ]
+    return (
+        hashed.groupBy(key)
+        .agg(*aggs)
+        .select(key, F.array(*[F.col(f"m{i}") for i in range(num_perm)]).alias("sig"))
+    )
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -545,26 +645,12 @@ def minhash_signatures(
     num_perm: int = 64,
     k: int = 5,
     seed: int = 42,
+    hash: str = "xxhash64",
 ) -> DataFrame:
-    """(id, sig array<bigint>) MinHash signatures.
-
-    Plan: explode shingles → one groupBy(id) carrying ``num_perm`` plain
-    ``min(pmod(h*a+b, P))`` aggregates. All aggregates are whole-stage
-    codegen'd; the per-row higher-order-function variant
-    (array_min∘transform, interpreted per element) measured ~10× slower.
-    One shuffle on id with map-side partial mins — scale-friendly."""
-    params = _perm_params(num_perm, seed)
-    hashed = char_shingles(df, text_col, id_col, k).select(
-        "id", F.abs(F.xxhash64("shingle")).alias("h")
-    )
-    aggs = [
-        F.min(F.expr(f"pmod(h * {a}L + {b}L, {_PRIME}L)")).alias(f"m{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    return (
-        hashed.groupBy("id")
-        .agg(*aggs)
-        .select("id", F.array(*[F.col(f"m{i}") for i in range(num_perm)]).alias("sig"))
+    """(id, sig array<bigint>) MinHash signatures over distinct k-char
+    shingles (see :func:`minhash_sketch`)."""
+    return minhash_sketch(
+        char_shingles(df, text_col, id_col, k), "id", "shingle", num_perm, seed, hash
     )
 
 
@@ -578,6 +664,7 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     seed: int = 42,
     max_bucket: int | None = 1000,
+    hash: str = "xxhash64",
 ) -> DataFrame:
     """MinHash-LSH near-dup candidate pairs, verified by estimated Jaccard
     (signature agreement rate ≥ threshold).
@@ -603,8 +690,14 @@ def minhash_lsh_pairs(
     and connected-components downstream closes the cluster) from
     template chrome (members disagree with the rep → filtered). Pass
     ``None`` to disable (exact gate-scale parity with the unbanded
-    oracle)."""
+    oracle).
+
+    ``hash="md5"`` selects the oracle-reproducible signatures and
+    concatenated-slice bucket keys (see ``_SKETCH_HASHES``); a DuckDB
+    oracle of that path must mirror ``max_bucket`` — both the cap and
+    the star — or the caller passes ``None``."""
     assert num_perm % bands == 0
+    band_key = _sketch_hash(hash).band_key
     rows = num_perm // bands
     # Null-id rows can never reach the output (the verification joins
     # below are inner on id), but WITHOUT this explicit filter only the
@@ -615,7 +708,7 @@ def minhash_lsh_pairs(
     # 37s executor CPU at sf0.1). With the filter both branches are
     # identical and the signatures compute once.
     df = df.filter(F.col(id_col).isNotNull())
-    sig = minhash_signatures(df, text_col, id_col, num_perm, k, seed)
+    sig = minhash_signatures(df, text_col, id_col, num_perm, k, seed, hash)
     # candidate generation carries ONLY (id, band, bucket) through the
     # shuffle — signatures (the wide arrays) re-join after pair dedup
     # (carrying them through the bucket join measured ~100× the shuffle
@@ -627,7 +720,7 @@ def minhash_lsh_pairs(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        F.hash(
+                        band_key(
                             *[F.col("sig").getItem(b * rows + r) for r in range(rows)]
                         ).alias("bucket"),
                     )
@@ -668,15 +761,9 @@ def minhash_lsh_pairs(
     if star is not None:
         cand = cand.unionByName(star)
     cand = cand.dropDuplicates(["id_a", "id_b"])
-    # Flat codegen'd agreement count (r10): the former
-    # size(filter(zip_with(...))) is a CodegenFallback HOF chain that
-    # drops the per-pair projection to interpreted eval (same finding
-    # as the flattened cosine scorers). sig is array(m0..m63) straight
-    # off the aggregate, so sig[i] collapses to the raw agg column and
-    # the join sides carry scalar longs; the CASE-sum is an integer, so
-    # est_jaccard is bit-identical to the HOF count (the portable twin
-    # below has scored this way since r8). Expressions ship as strings
-    # — a 64-term Column chain costs seconds of py4j plan-build time.
+    # Flat codegen'd agreement count (see signature_agreement). sig is
+    # array(m0..m63) straight off the aggregate, so sig[i] collapses to
+    # the raw agg column and the join sides carry scalar longs.
     flat_a = sig.selectExpr(
         "id as id_a", *[f"sig[{i}] as __sa{i}" for i in range(num_perm)]
     )
@@ -684,10 +771,7 @@ def minhash_lsh_pairs(
         "id as id_b", *[f"sig[{i}] as __sb{i}" for i in range(num_perm)]
     )
     with_sigs = cand.join(flat_a, "id_a").join(flat_b, "id_b")
-    agree_n = " + ".join(
-        f"(CASE WHEN __sa{i} = __sb{i} THEN 1 ELSE 0 END)"
-        for i in range(num_perm)
-    )
+    agree_n = signature_agreement("__sa{}", "__sb{}", num_perm)
     return (
         with_sigs.withColumn(
             "est_jaccard",
@@ -698,198 +782,44 @@ def minhash_lsh_pairs(
     )
 
 
-# Portable MinHash: md5-derived 40-bit shingle hashes with small-coefficient
-# permutations — every intermediate fits int64 exactly, so an ANSI-SQL
-# engine (the DuckDB oracle) reproduces it bit-for-bit. The xxhash64
-# variant above stays the production path (faster, engine-native).
-_P40 = 1099511627689  # prime > 2^40
-
-
-def portable_perm_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
-    """(a, b) with a < 2^20, b < 2^40: h*a+b < 2^61 — exact in int64."""
-    return [
-        ((a % ((1 << 20) - 1)) + 1, b % _P40) for a, b in _perm_params(num_perm, seed)
-    ]
-
-
-def minhash_signatures_portable(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 32,
-    k: int = 5,
-    seed: int = 42,
-) -> DataFrame:
-    """(id, m0..m{n-1}) MinHash signature columns, oracle-reproducible."""
-    params = portable_perm_params(num_perm, seed)
-    hashed = char_shingles(df, text_col, id_col, k).select(
-        "id",
-        F.expr("cast(conv(substring(md5(shingle), 1, 10), 16, 10) as bigint)").alias("h"),
-    )
-    aggs = [
-        F.min(F.expr(f"(h * {a}L + {b}L) % {_P40}L")).alias(f"m{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    return hashed.groupBy("id").agg(*aggs)
-
-
-def minhash_lsh_pairs_portable(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 32,
-    bands: int = 8,
-    k: int = 5,
-    threshold: float = 0.4,
-    seed: int = 42,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Oracle-reproducible MinHash-LSH pairs: band bucket key is the
-    concatenated signature slice (portable across engines, unlike
-    murmur3 ``F.hash``). ``max_bucket`` is the same skew guard as the
-    production variant's (oversized buckets degrade to a star against
-    min(id) — see :func:`minhash_lsh_pairs`), default OFF here so the
-    gate-scale oracle comparison stays unconditional — an oracle
-    adopting it must mirror both the cap and the star on the same
-    bucket key."""
-    assert num_perm % bands == 0
-    rows = num_perm // bands
-    # same explicit null-id filter as minhash_lsh_pairs: keeps the
-    # banded and verification branches' scans canonically identical so
-    # AQE stage-reuses the signature pipeline (inner sig joins drop
-    # null ids anyway — output unchanged)
-    df = df.filter(F.col(id_col).isNotNull())
-    sig = minhash_signatures_portable(df, text_col, id_col, num_perm, k, seed)
-    # same shuffle-slimming as the xxhash64 variant: bucket join carries
-    # only (id, band, bucket); signature columns re-join after pair dedup
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            "-", *[F.col(f"m{b * rows + r}") for r in range(rows)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-    star = None
-    if max_bucket is not None:
-        # window-fused skew guard — same shape as minhash_lsh_pairs
-        # above (one (band,bucket) shuffle shared with the self-join)
-        wbb = Window.partitionBy("band", "bucket")
-        tagged = banded.select(
-            "id",
-            "band",
-            "bucket",
-            F.count(F.lit(1)).over(wbb).alias("__bn"),
-            F.min("id").over(wbb).alias("__rep"),
-        )
-        star = tagged.filter(
-            (F.col("__bn") > max_bucket) & (F.col("id") != F.col("__rep"))
-        ).select(F.col("__rep").alias("id_a"), F.col("id").alias("id_b"))
-        banded = tagged.filter(F.col("__bn") <= max_bucket).drop(
-            "__bn", "__rep"
-        )
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
-    if star is not None:
-        cand = cand.unionByName(star)
-    cand = cand.dropDuplicates(["id_a", "id_b"])
-    sa = sig.select(F.col("id").alias("id_a"), *[F.col(f"m{i}").alias(f"am{i}") for i in range(num_perm)])
-    sb = sig.select(F.col("id").alias("id_b"), *[F.col(f"m{i}").alias(f"bm{i}") for i in range(num_perm)])
-    with_sigs = cand.join(sa, "id_a").join(sb, "id_b")
-    agree = None
-    for i in range(num_perm):
-        term = F.when(F.col(f"am{i}") == F.col(f"bm{i}"), 1).otherwise(0)
-        agree = term if agree is None else agree + term
-    return (
-        with_sigs.withColumn("est_jaccard", agree / F.lit(float(num_perm)))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
-
-
 def simhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    hash: str = "xxhash64",
 ) -> DataFrame:
-    """(id, sim bigint) 64-bit SimHash: per token-occurrence xxhash64,
-    vote +1/−1 per bit, sign → bit.
+    """(id, sim bigint) SimHash: per token-occurrence hash, vote +1/−1
+    per bit, sign → bit. The width follows ``hash``: 64 bits for
+    xxhash64, 60 for md5 (the hex prefix — every intermediate exact in
+    int64, so a DuckDB oracle reproduces it; see ``_SKETCH_HASHES``).
 
-    Plan: explode tokens → groupBy(id) with 64 codegen'd
-    ``sum(bit ? 1 : -1)`` vote aggregates → assemble the 64 sign bits.
-    (The per-row nested higher-order fold is interpreted per element —
-    measured ~10× slower.) One shuffle on id with map-side partials."""
+    Plan: explode tokens → groupBy(id) with one codegen'd
+    ``sum(bit ? 1 : -1)`` vote aggregate per bit → assemble the sign
+    bits. (The per-row nested higher-order fold is interpreted per
+    element — measured ~10× slower.) One shuffle on id with map-side
+    partials."""
+    s = _sketch_hash(hash)
     toks = ensure_parallelism(
         df.select(F.col(id_col).alias("id"), normalized(text_col).alias("_norm"))
     ).select(
         "id",
         F.explode(F.expr("filter(split(_norm, ' '), t -> t <> '')")).alias("tok"),
     )
-    hashed = toks.select("id", F.xxhash64("tok").alias("h"))
+    hashed = toks.select("id", F.expr(s.simhash_h.format("tok")).alias("h"))
     votes = hashed.groupBy("id").agg(
         *[
             # branch-free ±1 vote: ((bit)*2 - 1) generates less code than
             # a CASE and the 64-agg compile is the cold-path cost here
             F.sum(F.expr(f"(((h >> {b}) & 1) * 2 - 1)")).alias(f"v{b}")
-            for b in range(64)
+            for b in range(s.simhash_bits)
         ]
     )
-    sim = None
-    for b in range(64):
-        # shiftleft(1L, 63) wraps to the long sign bit — intended
-        bit = F.when(F.col(f"v{b}") > 0, F.expr(f"shiftleft(1L, {b})")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        sim = bit if sim is None else sim + bit
-    return votes.select("id", sim.alias("sim"))
-
-
-def simhash_signatures_portable(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 60
-) -> DataFrame:
-    """(id, sim bigint) portable SimHash over md5-derived token hashes —
-    the ANSI-SQL-reproducible twin of :func:`simhash_signatures` (which
-    stays the production path on engine-native xxhash64). Token hash =
-    the md5 hex prefix as a ``bits``-wide integer (≤60 bits so every
-    intermediate is exact in int64 on any engine); per-bit ±1 votes,
-    sign → bit, identical plan shape (explode → one groupBy(id) carrying
-    ``bits`` codegen'd sum aggregates)."""
-    assert 1 <= bits <= 60  # 15 hex digits
-    toks = ensure_parallelism(
-        df.select(F.col(id_col).alias("id"), normalized(text_col).alias("_norm"))
-    ).select(
-        "id",
-        F.explode(F.expr("filter(split(_norm, ' '), t -> t <> '')")).alias("tok"),
+    # shiftleft(1L, 63) wraps to the long sign bit — intended
+    sim = " + ".join(
+        f"CASE WHEN v{b} > 0 THEN shiftleft(1L, {b}) ELSE 0L END"
+        for b in range(s.simhash_bits)
     )
-    hashed = toks.select(
-        "id",
-        F.expr(
-            f"cast(conv(substring(md5(tok), 1, {(bits + 3) // 4}), 16, 10) as bigint)"
-        ).alias("h"),
-    )
-    votes = hashed.groupBy("id").agg(
-        *[
-            F.sum(F.expr(f"(((h >> {b}) & 1) * 2 - 1)")).alias(f"v{b}")
-            for b in range(bits)
-        ]
-    )
-    sim = None
-    for b in range(bits):
-        bit = F.when(F.col(f"v{b}") > 0, F.expr(f"shiftleft(1L, {b})")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        sim = bit if sim is None else sim + bit
-    return votes.select("id", sim.alias("sim"))
+    return votes.selectExpr("id", f"{sim} AS sim")
 
 
 def _chunk_layout(n_chunks: int) -> list[tuple[int, int]]:

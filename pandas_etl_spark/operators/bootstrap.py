@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_P40 = 1099511627689  # prime > 2^40 — same modulus as the portable MinHash
+from pandas_etl_spark.functions.dedup import _P40
 
 
 def _perm_params(n: int, seed: int) -> list[tuple[int, int]]:

@@ -47,6 +47,9 @@ SMOKE_NAMES = sorted(
         "bootstrap_ci_mean_price",
         "ann_pq_checked",
         "ngram_jaccard_prefix",
+        "simhash_checked",
+        "dedup_recall_audit_checked",
+        "minhash_source_signature_checked",
     }
 )
 

@@ -2645,13 +2645,14 @@ def test_markov_attribution_no_conversions(spark):
     assert all(r.removal_effect == 0.0 and r.attribution == 0.0 for r in out)
 
 
-def test_minhash_lsh_bucket_cap_guards_skew(spark):
+@pytest.mark.parametrize("hash", ["xxhash64", "md5"])
+def test_minhash_lsh_bucket_cap_guards_skew(spark, hash):
     """The max_bucket skew guard: on a normal corpus the default cap is
     inert (identical pairs with cap on/off); a mega-bucket (many docs
     sharing dominant boilerplate shingles that align their per-band
     minima) is dropped by a small cap instead of exploding into B²
     candidate pairs, while pairs that also collide in an uncapped band
-    survive."""
+    survive — on both hash schemes, which share the guard."""
     from pandas_etl_spark.functions.dedup import minhash_lsh_pairs
 
     base = [
@@ -2664,7 +2665,9 @@ def test_minhash_lsh_bucket_cap_guards_skew(spark):
     def pairs(frame, **kw):
         return {
             (r.id_a, r.id_b)
-            for r in minhash_lsh_pairs(frame, threshold=0.5, **kw).collect()
+            for r in minhash_lsh_pairs(
+                frame, threshold=0.5, hash=hash, **kw
+            ).collect()
         }
 
     assert pairs(df, max_bucket=None) == pairs(df, max_bucket=1000)
@@ -2691,6 +2694,21 @@ def test_minhash_lsh_bucket_cap_guards_skew(spark):
     assert {p for p in uncapped if p[0] < 200 and p[1] < 200} == {
         p for p in capped if p[0] < 200 and p[1] < 200
     }
+
+
+def test_sketch_hash_rejects_unknown_scheme(spark):
+    """The sketch operators take exactly two hash schemes; any other
+    name fails at plan build instead of silently picking one."""
+    from pandas_etl_spark.functions.dedup import (
+        minhash_lsh_pairs,
+        minhash_signatures,
+        simhash_signatures,
+    )
+
+    df = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
+    for op in (minhash_lsh_pairs, minhash_signatures, simhash_signatures):
+        with pytest.raises(ValueError, match="murmur3"):
+            op(df, hash="murmur3")
 
 
 def test_portable_hll_raw_branch_accuracy(spark):
@@ -2771,13 +2789,15 @@ def test_dup_groups_planted_duplicates(spark):
     assert got == {1: 3, 5: 2}
 
 
-def test_minhash_lsh_mega_family_star_recall(spark):
+@pytest.mark.parametrize("hash", ["xxhash64", "md5"])
+def test_minhash_lsh_mega_family_star_recall(spark, hash):
     """ADVICE r7: a genuine near-dup family LARGER than max_bucket
     shares its per-band minima in EVERY band, so drop-the-bucket
     semantics would emit ZERO pairs for precisely the largest true
     duplicate clusters. The star degradation instead pairs every member
     against the bucket's min id at O(B) cost, and the signature
-    verification keeps those pairs (members ≈ representative)."""
+    verification keeps those pairs (members ≈ representative) — on
+    both hash schemes."""
     from pandas_etl_spark.functions.dedup import minhash_lsh_pairs
 
     body = "the quick brown fox jumps over the lazy dog again " * 8
@@ -2786,7 +2806,9 @@ def test_minhash_lsh_mega_family_star_recall(spark):
 
     out = {
         (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(df, threshold=0.5, max_bucket=10).collect()
+        for r in minhash_lsh_pairs(
+            df, threshold=0.5, max_bucket=10, hash=hash
+        ).collect()
     }
     # every member reaches the representative (min id) — the family is
     # one connected component downstream, not invisible

@@ -876,13 +876,17 @@ def test_knn_scoring_has_no_interpreted_fold(spark, sf_dir):
         assert not offenders, (name, offenders)
 
 
-def test_minhash_verification_has_no_interpreted_fold(spark, sf_dir):
-    """r10: the signature-agreement verification scores candidate pairs
-    with a codegen'd CASE-sum over the flat m0..m63 agg columns — the
-    former size(filter(zip_with(...))) was a CodegenFallback chain that
-    dropped the per-pair projection to interpreted eval (A/B at sf0.1:
+@pytest.mark.parametrize(
+    "name",
+    ["minhash_lsh_pairs", "minhash_lsh_pairs_checked", "minhash_source_signature"],
+)
+def test_minhash_verification_has_no_interpreted_fold(spark, sf_dir, name):
+    """r10: every MinHash signature comparison scores pairs with the
+    codegen'd CASE-sum of functions/dedup.signature_agreement — a
+    size(filter(zip_with(...))) fold is a CodegenFallback chain that
+    drops the per-pair projection to interpreted eval (A/B at sf0.1:
     warm 4.7 -> 3.4 s). Same offender scan as the kNN scorer pin."""
-    df = QUERIES["minhash_lsh_pairs"](spark, sf_dir)
+    df = QUERIES[name](spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
     plan = df._jdf.queryExecution().executedPlan().toString()
     plan = plan.split("== Initial Plan ==")[0]
@@ -937,3 +941,14 @@ def test_plan_build_runs_no_spark_job(spark, sf_dir):
         QUERIES[name](spark, sf_dir)
         ran[name] = jobs() - before
     assert not any(ran.values()), ran
+
+
+def test_recall_audit_build_runs_no_spark_job(spark, sf_dir):
+    """dedup_recall_audit summarizes its pair sets with lazy one-row
+    aggregates, so building the plan (over files read before) submits
+    no Spark job — counting the pairs eagerly ran three."""
+    jobs = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs
+    QUERIES["dedup_recall_audit"](spark, sf_dir)
+    before = jobs()
+    QUERIES["dedup_recall_audit"](spark, sf_dir)
+    assert jobs() == before
