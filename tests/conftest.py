@@ -7,7 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pandas_etl_spark.session import get_spark  # noqa: E402
+from pandas_etl_spark.session import class_data_archive, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -22,17 +22,24 @@ def _fast_tier(config) -> bool:
     return config.getoption("markexpr").strip() == "not slow"
 
 
-def pytest_report_header(config):
+def _header(config) -> list[str]:
     """Say when the run is the fast tier, so a passing default run is not
-    read as full-catalog oracle parity."""
-    return [FAST_TIER_BANNER] if _fast_tier(config) else []
+    read as full-catalog oracle parity, and whether the session's driver
+    JVM starts from the class-data archive, records it or skips it."""
+    lines = [FAST_TIER_BANNER] if _fast_tier(config) else []
+    return lines + [class_data_archive().describe()]
+
+
+def pytest_report_header(config):
+    return _header(config)
 
 
 def pytest_sessionstart(session):
     # -q hides the report header, and the usual suite command runs -q
     tr = session.config.pluginmanager.get_plugin("terminalreporter")
-    if tr is not None and session.config.get_verbosity() < 0 and _fast_tier(session.config):
-        tr.write_line(FAST_TIER_BANNER)
+    if tr is not None and session.config.get_verbosity() < 0:
+        for line in _header(session.config):
+            tr.write_line(line)
 
 
 @pytest.fixture(scope="session")

@@ -3,7 +3,13 @@ failure modes a 100 TB pipeline hits on real data lakes."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
+
+# the checkout under test: subprocesses run from here, so they import
+# this tree's package and not another copy's
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_corrupt_json_records_quarantined(spark, tmp_path):
@@ -105,6 +111,7 @@ steps:
         capture_output=True,
         text=True,
         timeout=300,
+        cwd=ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     import glob
@@ -144,7 +151,7 @@ print("OK", n)
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "OK" in proc.stdout
@@ -251,7 +258,7 @@ def test_doc_counts_match_registry():
 
     from pandas_etl_spark.catalog import ORACLES, QUERIES
 
-    readme = open("/root/repo/README.md").read()
+    readme = open(ROOT / "README.md").read()
     marked = [l for l in readme.splitlines() if "<!-- counts:auto -->" in l]
     assert marked, "README lost its counts:auto marker"
     for line in marked:
@@ -289,7 +296,7 @@ steps:
     proc = subprocess.run(
         [sys.executable, "-m", "pandas_etl_spark", "--file", str(yaml_file),
          "--explain", "--conf", "spark.sql.shuffle.partitions=4"],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "EXPLAIN sink csv" in proc.stdout
@@ -332,7 +339,7 @@ steps:
     proc = subprocess.run(
         [sys.executable, "-m", "pandas_etl_spark", "--file", str(yaml_file),
          "--explain", "--conf", "spark.sql.shuffle.partitions=4"],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert proc.stdout.count("EXPLAIN sink parquet") == 2
