@@ -44,16 +44,18 @@ Defaults are chosen for correctness-vs-oracle and 100 TB design posture:
   files, so when the Spark conf dir holds only ``*.template`` files,
   ``SPARK_CONF_DIR`` points at an empty directory in the cache for the
   launch. The launch is as without the archive when the conf dir,
-  ``$HADOOP_CONF_DIR`` or ``$YARN_CONF_DIR`` holds files, an extra
-  driver classpath is set, the cache is not writable, or the caller
-  sets ``defaultJavaOptions``. With no archive yet, the JVM records one
+  ``$HADOOP_CONF_DIR`` or ``$YARN_CONF_DIR`` holds files or cannot be
+  listed, an extra driver classpath is set, the cache is not writable,
+  or the caller sets ``defaultJavaOptions``. With no archive yet, the JVM records one
   at exit into ``<key>.<pid>.tmp`` (about 14 s longer exit, 180 MB).
   Only after that JVM has exited with status 0 is the file renamed onto
-  ``<key>.jsa``: at the next launch, or by an ``atexit`` hook that
-  closes the JVM's stdin and waits for it. A partial file must never
-  sit at the published path, because on JDK 17.0.20 a truncated archive
-  crashes the JVM with SIGBUS, even with ``-XX:+VerifySharedSpaces``.
-  A ``.tmp`` whose process is gone is deleted at the next launch.
+  ``<key>.jsa``, by an ``atexit`` hook that stops the SparkContext,
+  closes the JVM's stdin and waits for it. A partial file must never sit at the published path,
+  because on JDK 17.0.20 a truncated archive crashes the JVM with
+  SIGBUS, even with ``-XX:+VerifySharedSpaces``. A ``.tmp`` whose
+  process is gone is deleted at the next launch. Each launch from an
+  archive refreshes its mtime; publishing deletes the archives of other
+  keys (an older JDK or Spark) unused for 7 days.
 """
 
 from __future__ import annotations
@@ -63,8 +65,9 @@ import hashlib
 import os
 import re
 import shutil
+import time
 from collections.abc import Mapping
-from contextlib import contextmanager
+from contextlib import contextmanager, suppress
 from dataclasses import dataclass
 from pathlib import Path
 from subprocess import Popen, TimeoutExpired
@@ -121,6 +124,7 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
     when no active session exists.
     """
+    global _recording
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"
@@ -132,7 +136,6 @@ def get_spark(
         conf.update(extra_conf)
     cds = None
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
-        _settle_recordings(wait=False)
         cds = class_data_archive(conf)
         if cds.java_options:
             conf["spark.driver.defaultJavaOptions"] = cds.java_options
@@ -141,7 +144,7 @@ def get_spark(
     with _spark_conf_dir(cds.conf_dir if cds else None):
         spark = builder.getOrCreate()
     if cds is not None and cds.action == "record":
-        _RECORDING.append((SparkContext._gateway.proc, cds))
+        _recording = (SparkContext._gateway.proc, cds)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
@@ -156,6 +159,9 @@ _CDS_QUIET = "-Xlog:cds*=off"
 # on blanks and quotes; a cache path outside this set is not used
 _SAFE_PATH = re.compile(r"[\w./+@%-]+")
 _COOPS_MAX_MIB = 32 * 1024  # a heap this large turns compressed oops off
+# an archive of another key not started from for this long is deleted when
+# a new one is published (each is about 180 MB)
+_UNUSED_S = 7 * 24 * 3600
 _UNITS = {"": 1, "k": 1 / 1024, "m": 1, "g": 1024, "t": 1024**2}
 
 
@@ -184,11 +190,15 @@ def _cache_dir() -> Path:
     return Path(base) / "pandas_etl_spark" / "cds"
 
 
-def _files(path: str | Path) -> list[str]:
+def _files(path: str | Path) -> list[str] | None:
+    """The names in directory ``path``; [] if there is none, None if it
+    cannot be listed."""
     try:
         return os.listdir(path)
     except (NotADirectoryError, FileNotFoundError):
         return []
+    except OSError:
+        return None
 
 
 def _heap_mib(size: str) -> float:
@@ -233,11 +243,12 @@ def class_data_archive(conf: Mapping[str, str] = _DEFAULTS) -> ClassDataArchive:
         return skip("spark.driver.defaultJavaOptions is set")
     spark_home = Path(_find_spark_home())
     conf_dir = os.environ.get("SPARK_CONF_DIR") or str(spark_home / "conf")
-    if any(not f.endswith(".template") for f in _files(conf_dir)):
-        return skip(f"the Spark conf dir {conf_dir} holds files")
+    names = _files(conf_dir)
+    if names is None or any(not f.endswith(".template") for f in names):
+        return skip(f"the Spark conf dir {conf_dir} holds files or cannot be listed")
     for var in ("HADOOP_CONF_DIR", "YARN_CONF_DIR"):
-        if _files(os.environ.get(var, "")):
-            return skip(f"${var} holds files")
+        if _files(os.environ.get(var, "")) != []:
+            return skip(f"${var} holds files or cannot be listed")
     if (conf.get("spark.driver.extraClassPath") or os.environ.get("SPARK_CLASSPATH")
             or os.environ.get("SPARK_DIST_CLASSPATH")):
         return skip("an extra driver classpath is set")
@@ -255,7 +266,7 @@ def class_data_archive(conf: Mapping[str, str] = _DEFAULTS) -> ClassDataArchive:
         return skip(f"{cache} is not writable")
     if not _SAFE_PATH.fullmatch(str(cache)):
         return skip(f"{cache} needs quoting")
-    if _files(empty):
+    if _files(empty) != []:
         return skip(f"{empty} holds files")
     for tmp in cache.glob("*.tmp"):
         pid = tmp.name.split(".")[-2]
@@ -265,45 +276,55 @@ def class_data_archive(conf: Mapping[str, str] = _DEFAULTS) -> ClassDataArchive:
     key = _archive_key(java, spark_home, conf.get("spark.driver.memory", "1g"))
     archive = cache / f"{key}.jsa"
     if archive.is_file():
+        with suppress(OSError):
+            os.utime(archive)  # marks it as in use for the pruning at publish
         return ClassDataArchive(
             "use", archive, java_options=f"-XX:SharedArchiveFile={archive} {_CDS_QUIET}",
             conf_dir=str(empty))
-    if _RECORDING:
-        return skip("this process is still recording an archive")
     tmp = cache / f"{key}.{os.getpid()}.tmp"
     return ClassDataArchive(
         "record", archive, java_options=f"-XX:ArchiveClassesAtExit={tmp} {_CDS_QUIET}",
         conf_dir=str(empty), tmp=tmp)
 
 
-# (JVM process, its plan) for each launch still recording an archive;
-# process-wide, like pyspark's own gateway
-_RECORDING: list[tuple[Popen, ClassDataArchive]] = []
+# the JVM this process launched to record an archive, and its plan;
+# pyspark launches at most one gateway JVM per process
+_recording: tuple[Popen, ClassDataArchive] | None = None
 
 
-def _settle_recordings(wait: bool) -> None:
-    """Publish the archive of each recording JVM that exited with status 0
-    and delete the temp file of any other. With ``wait``, first close the
-    stdin of a JVM still running (the gateway exits on EOF) and wait."""
-    for rec in list(_RECORDING):
-        proc, cds = rec
-        if proc.poll() is None:
-            if not wait:
-                continue
-            proc.stdin.close()
-            try:
-                proc.wait(timeout=600)
-            except TimeoutExpired:
-                proc.kill()
-                proc.wait()
-        _RECORDING.remove(rec)
-        if proc.returncode == 0 and cds.tmp.is_file():
-            os.replace(cds.tmp, cds.archive)
-        else:
-            cds.tmp.unlink(missing_ok=True)
+def _publish_recording() -> None:
+    """Stop the SparkContext on the recording JVM, close its stdin (the
+    gateway exits on EOF), wait for it, and publish its archive only if it exited with status 0; else
+    delete the temp file. Publishing deletes the archives of other keys
+    that no launch has started from for ``_UNUSED_S``."""
+    global _recording
+    if _recording is None:
+        return
+    proc, cds = _recording
+    _recording = None
+    sc = SparkContext._active_spark_context
+    if sc is not None and getattr(SparkContext._gateway, "proc", None) is proc:
+        # stops the accumulator server first: a JVM exit under its open
+        # connection prints an EOFError traceback
+        with suppress(Exception):
+            sc.stop()
+    proc.stdin.close()
+    try:
+        proc.wait(timeout=600)
+    except TimeoutExpired:
+        proc.kill()
+        proc.wait()
+    if proc.returncode != 0 or not cds.tmp.is_file():
+        cds.tmp.unlink(missing_ok=True)
+        return
+    os.replace(cds.tmp, cds.archive)
+    for old in cds.archive.parent.glob("*.jsa"):
+        with suppress(OSError):
+            if old != cds.archive and time.time() - old.stat().st_mtime > _UNUSED_S:
+                old.unlink()
 
 
-atexit.register(_settle_recordings, wait=True)
+atexit.register(_publish_recording)
 
 
 @contextmanager

@@ -23,8 +23,9 @@ from pandas_etl_spark.session import ClassDataArchive, class_data_archive
 
 ROOT = Path(__file__).resolve().parents[1]
 
-# A driver process: start the session, run one query, report what its
-# JVM was launched with. ``hold`` then sleeps (to be killed); ``wait``
+# A driver process: start the session, run one query and one Python job
+# (its accumulator updates open a connection from the JVM), report what
+# its JVM was launched with. ``hold`` then sleeps (to be killed); ``wait``
 # then reads stdin to EOF.
 CHILD = r"""
 import json, sys, time
@@ -39,6 +40,7 @@ print("REPORT " + json.dumps({
                  .getInputArguments()),
     "conf_dir": jvm.java.lang.System.getenv("SPARK_CONF_DIR"),
     "rows": [list(r) for r in rows],
+    "squares": spark.sparkContext.parallelize(range(10), 2).map(lambda x: x * x).sum(),
 }), flush=True)
 if sys.argv[1:] == ["hold"]:
     time.sleep(600)
@@ -120,6 +122,7 @@ def published(tmp_path_factory):
     rest, err = recorder.communicate(input="", timeout=300)
     assert recorder.returncode == 0, err[-3000:]
     out["recorder_pid"] = recorder.pid
+    out["recorder_err"] = err
     out["recorder_noise"] = "\n".join(
         line for line in (rest + err).splitlines() if CDS_NOISE.search(line))
     out["after_record"] = _names(cds)
@@ -165,6 +168,7 @@ def test_archive_is_published_after_exit_and_used_by_the_next_start(published):
     assert published["recorder"]["conf_dir"] == published["user"]["conf_dir"] == str(
         cds / "empty-conf")
     assert published["recorder"]["rows"] == published["user"]["rows"] == EXPECTED_ROWS
+    assert published["recorder"]["squares"] == published["user"]["squares"] == 285
 
 
 @pytest.mark.slow  # about 60 s: two JVMs each write an archive at exit
@@ -187,6 +191,11 @@ def test_no_jvm_outlives_the_recording_process(published):
 def test_no_cds_lines_in_driver_output(published):
     assert published["recorder_noise"] == ""
     assert published["user_noise"] == ""
+
+
+def test_recording_exit_prints_no_traceback(published):
+    # the JVM exits before Python does, under pyspark's accumulator server
+    assert "Traceback" not in published["recorder_err"], published["recorder_err"][-3000:]
 
 
 def test_conf_dir_with_files_leaves_the_launch_untouched(tmp_path):
@@ -220,9 +229,12 @@ def test_launch_plan_records_then_uses(cache):
     assert plan.conf_dir == str(cache / "empty-conf")
     assert plan.java_options.startswith(f"-XX:ArchiveClassesAtExit={plan.tmp} ")
     plan.archive.write_bytes(b"")
+    os.utime(plan.archive, (0, 0))
     again = class_data_archive()
     assert again.action == "use" and again.archive == plan.archive
     assert again.java_options.startswith(f"-XX:SharedArchiveFile={plan.archive} ")
+    # a launch from the archive marks it as in use
+    assert time.time() - plan.archive.stat().st_mtime < 60
 
 
 def test_archive_key_follows_the_compressed_oops_mode(cache):
@@ -253,7 +265,23 @@ def test_launch_skips_the_archive(cache, tmp_path, monkeypatch):
     assert class_data_archive().action == "record"
     (hadoop / "core-site.xml").write_text("<configuration/>")
     assert class_data_archive().action == "skip"
+
+    # a conf dir that cannot be listed may hold files
+    (hadoop / "core-site.xml").unlink()
+    listdir = os.listdir
+
+    def unreadable(path):
+        if str(path) == str(hadoop):
+            raise PermissionError(13, "Permission denied", str(path))
+        return listdir(path)
+
+    monkeypatch.setattr(os, "listdir", unreadable)
+    assert class_data_archive().action == "skip"
     monkeypatch.delenv("HADOOP_CONF_DIR")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(hadoop))
+    assert class_data_archive().action == "skip"
+    monkeypatch.delenv("SPARK_CONF_DIR")
+    assert class_data_archive().action == "record"
 
     not_a_dir = tmp_path / "file"
     not_a_dir.write_text("")
@@ -274,22 +302,24 @@ def test_stale_tmp_files_are_removed(cache):
 
 
 def test_publish_only_after_a_clean_exit(tmp_path, monkeypatch):
-    monkeypatch.setattr(session, "_RECORDING", [])
-
-    def recording(name, code):
+    def publish(name, code):
         proc = subprocess.Popen([sys.executable, "-c", f"import sys; sys.stdin.read(); {code}"],
                                 stdin=subprocess.PIPE)
         plan = ClassDataArchive("record", tmp_path / f"{name}.jsa", tmp=tmp_path / f"{name}.tmp")
         plan.tmp.write_bytes(b"archive")
-        session._RECORDING.append((proc, plan))
+        monkeypatch.setattr(session, "_recording", (proc, plan))
+        assert not plan.archive.exists()
+        session._publish_recording()  # closes stdin, waits for the exit
+        assert proc.returncode is not None and session._recording is None
+        assert not plan.tmp.exists()
         return plan
 
-    clean = recording("clean", "sys.exit(0)")
-    failed = recording("failed", "sys.exit(3)")
-    session._settle_recordings(wait=False)  # both still running
-    assert clean.tmp.exists() and failed.tmp.exists()
-    assert not clean.archive.exists() and not failed.archive.exists()
-    session._settle_recordings(wait=True)
-    assert clean.archive.read_bytes() == b"archive" and not clean.tmp.exists()
-    assert not failed.archive.exists() and not failed.tmp.exists()
-    assert session._RECORDING == []
+    unused, in_use = tmp_path / "unused.jsa", tmp_path / "in-use.jsa"
+    unused.write_bytes(b"old")
+    in_use.write_bytes(b"old")
+    os.utime(unused, (0, 0))
+    assert not publish("failed", "sys.exit(3)").archive.exists()
+    assert unused.exists()
+    assert publish("clean", "sys.exit(0)").archive.read_bytes() == b"archive"
+    # publishing deletes only the archives no launch started from lately
+    assert not unused.exists() and in_use.exists()
